@@ -226,9 +226,12 @@ def main() -> None:
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     loadavg_start = os.getloadavg()
     probe = min(cpu_probe() for _ in range(3))  # min-of-3, like the queries
-    cpus = os.cpu_count() or 1
+    host_cpus = os.cpu_count() or 1
     spark = get_session("syslog-ng-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    # the cores the queries run on: local[$SPARK_GRAFT_CPUS], which
+    # can be fewer than the host has
+    cpus = spark.sparkContext.defaultParallelism
 
     # warm the JVM + parquet footers once so timings measure the queries
     QUERIES["q1_pricing_summary"](spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -258,6 +261,7 @@ def main() -> None:
         "n_runs": N_RUNS,
         "loadavg_start": [round(x, 2) for x in loadavg_start],
         "cpus": cpus,
+        "host_cpus": host_cpus,
         "cpu_probe_sec": probe,
     }
     # regression floor: each query is compared against its recorded
@@ -298,7 +302,7 @@ def main() -> None:
             # Spark work started is contention, not a code regression —
             # say so in the artifact instead of asking the reader to guess
             out["flags_suspect_host_contention"] = bool(flagged) and (
-                loadavg_start[0] > 0.25 * cpus
+                loadavg_start[0] > 0.25 * host_cpus
             )
     # Line order matters: the driver preserves only the TAIL of stdout
     # (2000 chars as of r10 — BENCH_r09/r10.json both recorded

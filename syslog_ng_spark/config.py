@@ -311,7 +311,11 @@ def _step(df: DataFrame, spec: Mapping, templates: Mapping | None = None) -> Dat
             df, raw=spec.get("column", "raw"), year=spec.get("year", 2024)
         )
     if op == "parse-csv":
-        return parsers.csv_parser(df, spec["column"], spec["names"], sep=spec.get("sep", ","))
+        # csvparser.c only sets the new name-value pairs; the source
+        # column ($MSG by default) stays for later templates
+        return parsers.csv_parser(
+            df, spec["column"], spec["names"], sep=spec.get("sep", ","), drop=False
+        )
     if op == "parse-kv":
         if spec.get("quoted"):
             return parsers.kv_parser_quoted(df, spec["column"], target=spec.get("target", "kv"))

@@ -44,12 +44,17 @@ def apache_accesslog_parser(
     don't match yield nulls (the reference's drop-invalid is a
     .where(col(prefix+'response').isNotNull()) away).
 
-    The 11-group regex runs ONCE per row via parsers._single_pass_groups
-    (the per-column regexp_extract form re-executed it ~11x per row —
-    the same pathology urltools.url_normalize measured at 2.5x)."""
+    The 11-group regex runs ONCE per row: parsers._single_pass_groups
+    stages its groups behind a Generate node. A per-column
+    regexp_extract re-executed it ~11x per row (the pathology
+    urltools.url_normalize measured at 2.5x), and a plain column alias
+    would not hold either: Catalyst inlines deterministic aliases into
+    the predicates it pushes below a Project (say a filter on
+    apache_response), and the Filter shares no subexpressions, so the
+    regex would run once per reference there."""
     from syslog_ng_spark.operators.parsers import _single_pass_groups
 
-    staged = df.withColumn("_ag", _single_pass_groups(F.col(col), _APACHE_RE, 11))
+    staged = _single_pass_groups(df, F.col(col), _APACHE_RE, 11, "_ag")
 
     def g(i: int) -> Column:
         return F.coalesce(F.element_at(F.col("_ag"), i), F.lit(""))
@@ -124,11 +129,15 @@ def cisco_parser(df: DataFrame, col: str = "raw", prefix: str = "cisco_") -> Dat
     ints too, and tries the reference's timestamp format candidates
     in order (first parse wins, like date-parser's format list).
 
-    Single-pass staging: the 8-group regex executes once per row
-    (parsers._single_pass_groups), not once per output column."""
+    Single-pass staging: the 8-group regex executes once per row, not
+    once per output column and not once per predicate reference.
+    parsers._single_pass_groups puts it behind a Generate node, which
+    Catalyst cannot inline into a filter pushed below the parse (a
+    deterministic alias would be inlined, and the Filter shares no
+    subexpressions)."""
     from syslog_ng_spark.operators.parsers import _single_pass_groups
 
-    df = df.withColumn("_cg", _single_pass_groups(F.col(col), _CISCO_RE, 8))
+    df = _single_pass_groups(df, F.col(col), _CISCO_RE, 8, "_cg")
 
     def g(i: int) -> Column:
         return F.coalesce(F.element_at(F.col("_cg"), i), F.lit(""))

@@ -44,20 +44,61 @@ RFC5424_RE = (
 )
 
 
+# group separator of _single_pass_groups, and its two-character escapes
 _SEP = "\x1f"
+_ESC = "\x1e"
+_ESC_ESC = _ESC + "\x1c"
+_ESC_SEP = _ESC + "\x1d"
 
 
-def _single_pass_groups(c: Column, regex: str, n_groups: int) -> Column:
-    """Run the parse regex ONCE per row: rewrite the line into a
-    \\x1f-delimited group list, then split. The naive per-field
-    regexp_extract executes the same regex once per output column —
-    ~n_groups× the CPU on the hot ingest path. Non-matching rows yield
-    an empty array (caller nulls the fields)."""
+def _single_pass_groups(df: DataFrame, c: Column, regex: str, n_groups: int,
+                        name: str) -> DataFrame:
+    """Stage the parse regex's groups as array column ``name``, with the
+    regex run ONCE per row.
+
+    One regexp_replace rewrites the line into a \\x1f-delimited group
+    list, which is then split. A non-matching line comes back
+    untouched, so it has no separator and yields a NULL array, as
+    does a NULL line; callers null the fields.
+
+    The regexp_replace sits in a ``Generate`` node (explode of a
+    one-element array; explode keeps a NULL element, so every input
+    row comes out exactly once). That boundary is what keeps the
+    regex single: Catalyst inlines deterministic aliases into the
+    predicates it pushes below a Project, and a Filter does not share
+    subexpressions, so with a plain column alias a parse followed by
+    ``level()``/``facility()`` ran the full-line regex once per
+    reference (14 copies in the conf log path's plan). A generator
+    output is an attribute that cannot be inlined or copied.
+
+    Lines may carry the separator (any byte can reach a log source),
+    so it is escaped before the regex runs (_ESC_SEP, _ESC_ESC) and
+    restored in each group after the split: a separator anywhere in
+    the line stays in its group, and a non-matching line holding one
+    still yields NULL. Each escape is two control characters, and the
+    callers' regexes match such a pair exactly where they would match
+    the one character it replaces: only through ``\\S``, ``.`` or
+    negated classes, never under a bounded repeat, and never at a
+    group boundary between two such atoms. A new caller's regex must
+    keep that property."""
     repl = _SEP.join(f"${i}" for i in range(1, n_groups + 1))
-    replaced = F.regexp_replace(c, regex, repl)
-    # regexp_replace leaves non-matching rows untouched → detect by the
-    # absence of the separator (the separator never appears in logs)
-    return F.when(replaced.contains(_SEP), F.split(replaced, _SEP, -1))
+    escaped = F.replace(F.replace(c, F.lit(_ESC), F.lit(_ESC_ESC)), F.lit(_SEP), F.lit(_ESC_SEP))
+    staged = df.select(
+        "*", F.explode(F.array(F.regexp_replace(escaped, regex, repl))).alias(name)
+    )
+    replaced = F.col(name)
+    parts = F.split(replaced, _SEP)
+
+    def unescape(g: Column) -> Column:
+        return F.replace(F.replace(g, F.lit(_ESC_SEP), F.lit(_SEP)), F.lit(_ESC_ESC), F.lit(_ESC))
+
+    return staged.withColumn(
+        name,
+        F.when(
+            replaced.contains(_SEP),
+            F.when(replaced.contains(_ESC), F.transform(parts, unescape)).otherwise(parts),
+        ),
+    )
 
 
 def syslog_parser_3164(df: DataFrame, raw: str = "raw", year: int = 2024,
@@ -71,7 +112,7 @@ def syslog_parser_3164(df: DataFrame, raw: str = "raw", year: int = 2024,
     and user.notice (13) otherwise (syslog-format.c:96); the conf
     front-end sets it from default-facility()/default-severity()
     (cfg-grammar.y msg_format_option)."""
-    staged = df.withColumn("_g", _single_pass_groups(F.col(raw), RFC3164_RE, 6))
+    staged = _single_pass_groups(df, F.col(raw), RFC3164_RE, 6, "_g")
     g = lambda i: F.nullif(F.element_at(F.col("_g"), i), F.lit(""))  # noqa: E731
     pri = F.coalesce(g(1).cast("int"), F.lit(int(default_pri)))
     # normalize space-padded day ('Jan  5') for to_timestamp
@@ -97,7 +138,7 @@ def syslog_parser_5424(df: DataFrame, raw: str = "raw",
     .SDATA.sdid.param name-value pairs). A line whose <PRI> is absent
     (parse failure) takes ``default_pri`` — log_msg_parse_pri's
     fallback (syslog-format.c:96, user.notice unless configured)."""
-    staged = df.withColumn("_g", _single_pass_groups(F.col(raw), RFC5424_RE, 9)).withColumn(
+    staged = _single_pass_groups(df, F.col(raw), RFC5424_RE, 9, "_g").withColumn(
         "_sd", F.element_at(F.col("_g"), 8)
     )
     g = lambda i: F.nullif(F.element_at(F.col("_g"), i), F.lit("-"))  # noqa: E731

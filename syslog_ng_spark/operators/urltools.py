@@ -8,7 +8,7 @@ quality aggregation and rate caps. Reference-free extension (SURVEY
 handling, not a parser.
 
 All pure Catalyst string/array expressions; the URL regex runs once
-per row per part (no UDFs, no parse_url — its Java implementation is
+per row (no UDFs, no parse_url — its Java implementation is
 fine but DuckDB can't replay it, and the explicit regex IS the
 documented normalization contract).
 """
@@ -64,14 +64,17 @@ def url_normalize(
     parse (domain_rollup uses it — a separate url_host call would
     re-run the URL regex).
 
-    The URL regex runs ONCE per row (parsers._single_pass_groups):
-    the naive per-group regexp_extract ran it 6x; with the
-    registered_domain let-binding fix the end-to-end gate measured
-    23.7s -> 9.5s for 10M URLs at sf10 (2.5x)."""
+    The URL regex runs ONCE per row: the naive per-group
+    regexp_extract ran it 6x; with the registered_domain let-binding
+    fix the end-to-end gate measured 23.7s -> 9.5s for 10M URLs at
+    sf10 (2.5x). parsers._single_pass_groups stages the groups behind
+    a Generate node, so a filter on the result pushed below this
+    projection cannot copy the regex either (Catalyst inlines
+    deterministic aliases into pushed predicates, and a Filter shares
+    no subexpressions)."""
     from syslog_ng_spark.operators.parsers import _single_pass_groups
 
-    u = F.col(col)
-    staged = df.withColumn("_ug", _single_pass_groups(u, URL_RE, 5))
+    staged = _single_pass_groups(df, F.col(col), URL_RE, 5, "_ug")
     groups = F.col("_ug")
 
     def g(i: int) -> Column:

@@ -501,3 +501,34 @@ def test_duplicate_keys_last_wins(spark):
         "iso.3.6.1.4.1.1 = INTEGER: 1\tiso.3.6.1.4.1.1 = INTEGER: 2",
     )
     assert r.sdata[".snmp.iso.3.6.1.4.1.1"] == "2"
+
+
+def _regex_copies(df, regex: str) -> int:
+    return df._jdf.queryExecution().optimizedPlan().toString().count(regex)
+
+
+def test_apache_and_cisco_under_filter_run_regex_once(spark):
+    """A filter on a parsed field is pushed below the parse projection;
+    the parse regex must stay single in the optimized plan."""
+    from syslog_ng_spark.operators.app_parsers import _APACHE_RE, _CISCO_RE
+
+    apache = spark.createDataFrame(
+        [('127.0.0.1 - frank [10/Oct/2000:13:55:36 -0700] "GET / HTTP/1.0" 500 1',),
+         ('127.0.0.1 - frank [10/Oct/2000:13:55:36 -0700] "GET / HTTP/1.0" 200 1',)],
+        "message string",
+    )
+    errors = apache_accesslog_parser(apache, "message").where(
+        (F.col("apache_response") >= 400) & F.col("apache_clientip").isNotNull()
+    )
+    assert _regex_copies(errors, _APACHE_RE) == 1
+    assert errors.count() == 1
+    cisco = spark.createDataFrame(
+        [("<189>123: *Mar  1 18:46:11.299: %SYS-5-CONFIG_I: Configured",),
+         ("%LINK-3-UPDOWN: Interface FastEthernet0/1, changed state to down",)],
+        "raw string",
+    )
+    severe = cisco_parser(cisco, "raw").where(
+        (F.col("cisco_severity") <= 3) & (F.col("cisco_facility") != "SYS")
+    )
+    assert _regex_copies(severe, _CISCO_RE) == 1
+    assert [r.cisco_mnemonic for r in severe.collect()] == ["UPDOWN"]

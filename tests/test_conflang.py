@@ -952,6 +952,26 @@ log {{ source(s_f); filter(f_err); rewrite(r_mask); destination(d_f); }};
     ]
 
 
+def test_run_conf_csv_parser_keeps_source_column(spark, tmp_path):
+    """csv-parser() only sets new name-value pairs (csvparser.c): $MSG,
+    the column it parsed, still renders in a later template."""
+    src = tmp_path / "in.log"
+    src.write_text("\n".join(SYSLOG_LINES[:2]) + "\n")
+    outdir = tmp_path / "out"
+    text = f"""
+source s {{ file("{src}"); }};
+parser p {{ csv-parser(columns("verb", "path") delimiters(" ")); }};
+destination d {{ file("{outdir}" template("${{path}} | $MSG")); }};
+log {{ source(s); parser(p); destination(d); }};
+"""
+    run_conf(spark, text)
+    out = sorted(r["value"] for r in spark.read.text(str(outdir)).collect())
+    assert out == [
+        "/admin | GET /admin secret=hunter2 code=500",
+        "/index | GET /index code=200",
+    ]
+
+
 def test_run_conf_if_else_junction_routing(spark, tmp_path):
     """if/elif/else end-to-end: every message takes exactly one branch
     (guards are mutually exclusive and exhaustive), branch rewrites

@@ -240,3 +240,181 @@ def test_journal_export_parser(spark):
     assert b.program == "cron"  # _COMM fallback
     assert b.facility is None
     assert ".journald.BINARYISH" not in b.sdata  # no '=' -> skipped
+
+
+# --- single-pass staging (parsers._single_pass_groups) -------------------
+
+
+def _regex_copies(df, regex: str) -> int:
+    """How often the regex literal appears in the optimized plan: every
+    copy is one more execution per row."""
+    return df._jdf.queryExecution().optimizedPlan().toString().count(regex)
+
+
+def test_3164_message_keeps_separator(spark):
+    from syslog_ng_spark.operators.parsers import _SEP
+
+    lines = spark.createDataFrame(
+        [(f"<14>Mar  1 00:00:00 h1 app[7]: head{_SEP}tail part",)], "raw string"
+    )
+    row = syslog_parser_3164(lines).collect()[0]
+    assert row.message == f"head{_SEP}tail part"
+    assert (row.host, row.program, row.pid) == ("h1", "app", 7)
+
+
+def test_5424_message_keeps_separator(spark):
+    from syslog_ng_spark.operators.parsers import _SEP
+
+    raw = f'<165>1 2003-10-11T22:14:15Z h1 app 111 ID47 [a@1 k="v{_SEP}w"] head{_SEP}tail'
+    row = syslog_parser_5424(spark.createDataFrame([(raw,)], "raw string")).collect()[0]
+    assert row.message == f"head{_SEP}tail"
+    assert row.sdata == {"a@1.k": f"v{_SEP}w"}
+    assert (row.host, row.program, row.pid, row.msgid) == ("h1", "app", 111, "ID47")
+
+
+def test_separator_in_earlier_group_or_unmatched_line(spark):
+    """A separator inside HOST must not shift PROGRAM/PID (the pid cast
+    used to fail the whole job under ANSI), and a non-matching line
+    holding one must parse as no match."""
+    from syslog_ng_spark.operators.parsers import _SEP
+
+    lines = spark.createDataFrame(
+        [(f"<14>Mar  1 00:00:00 h{_SEP}1 app[7]: x",), (f"junk{_SEP}tail",)], "raw string"
+    )
+    rows = {r.message: r for r in syslog_parser_3164(lines).collect()}
+    assert (rows["x"].host, rows["x"].program, rows["x"].pid) == (f"h{_SEP}1", "app", 7)
+    assert rows[""].host is None and rows[""].pid is None and rows[""].ts is None
+
+
+def test_single_pass_groups_matches_per_column_extract(spark):
+    """The staged group array equals the per-column regexp_extract form
+    for all five callers' regexes, on matching, non-matching, NULL,
+    empty and separator/escape-carrying lines."""
+    from pyspark.sql import functions as F
+
+    from syslog_ng_spark.operators.app_parsers import _APACHE_RE, _CISCO_RE
+    from syslog_ng_spark.operators.parsers import (
+        _ESC,
+        _SEP,
+        RFC3164_RE,
+        RFC5424_RE,
+        _single_pass_groups,
+    )
+    from syslog_ng_spark.operators.urltools import URL_RE
+
+    s, e = _SEP, _ESC
+    lines = [
+        "<34>Oct 11 22:14:15 mymachine su[230]: 'su root' failed",
+        "Jan  5 03:04:05 web-01 cron: job started",
+        f"<14>Mar  1 00:00:00 h1 app[7]: head{s}tail part",
+        f"<14>Mar  1 00:00:00 h{s}1 a{e}pp: x{e}\x1c{s}{e}\x1d",
+        '<165>1 2003-10-11T22:14:15.003Z host app 111 ID47 [a@1 k="v"] msg',
+        f'<34>1 2003-10-11T22:14:15Z h{e}{s} - - - [a@1 k="{s}"] m{s}{e}',
+        "<34>1 2003-10-11T22:14:15Z - - - - -",
+        'vh:443 127.0.0.1 - frank [10/Oct/2000:13:55:36 -0700] "GET / HTTP/1.0" 200 2326',
+        f'127.0.0.1 - fr{s}ank [10/Oct/2000:13:55:36 -0700] "GET /{e} HTTP/1.0" 200 - '
+        f'"ref{s}" "agent{s}tail"',
+        "<189>123: *Mar  1 18:46:11.299: %SYS-5-CONFIG_I: Configured from console",
+        f"%LINK-3-UPDOWN: Interface Fa0/1{s}down{e}",
+        "HTTPS://WWW.Example.COM:443/Path?utm_source=x&q=1#frag",
+        f"https://u:p@ex{s}ample.com:8080/p{e}ath?q={s}1#f{s}",
+        f"junk{s}more{e}\x1d",
+        f"{s}{s}{s}{s}{s}{s}{s}{s}{s}{s}",
+        "",
+        None,
+    ]
+    df = spark.createDataFrame([(x,) for x in lines], "line string")
+    cases = {"rfc3164": (RFC3164_RE, 6), "rfc5424": (RFC5424_RE, 9),
+             "apache": (_APACHE_RE, 11), "cisco": (_CISCO_RE, 8), "url": (URL_RE, 5)}
+    staged = df
+    for name, (regex, n) in cases.items():
+        staged = _single_pass_groups(staged, F.col("line"), regex, n, name)
+        staged = staged.withColumn(
+            "want_" + name,
+            F.when(
+                F.col("line").rlike(regex),
+                F.array(*[F.regexp_extract("line", regex, i) for i in range(1, n + 1)]),
+            ),
+        )
+    rows = staged.collect()
+    assert len(rows) == len(lines)
+    matched = 0
+    for r in rows:
+        for name in cases:
+            assert r[name] == r["want_" + name], (name, r.line)
+            matched += r[name] is not None
+    assert matched == 13  # every regex sees lines it matches, not only misses
+
+
+def test_parse_under_filter_runs_regex_once(spark):
+    """A filter on parsed fields is pushed below the parse projection;
+    the regex must still appear once in the optimized plan, not once per
+    predicate reference."""
+    from pyspark.sql import functions as F
+
+    from syslog_ng_spark.operators.parsers import RFC3164_RE, RFC5424_RE
+
+    df = spark.createDataFrame([("<14>Mar  1 00:00:00 h1 app[7]: x",)], "raw string")
+    bsd = syslog_parser_3164(df).where(
+        (F.col("severity") <= 6) & (F.col("facility") != 9) & F.col("host").isNotNull()
+    )
+    assert _regex_copies(bsd, RFC3164_RE) == 1
+    assert bsd.count() == 1
+    ietf = syslog_parser_5424(df).where((F.col("severity") <= 6) & (F.col("facility") != 9))
+    assert _regex_copies(ietf, RFC5424_RE) == 1
+
+
+def test_conf_level_facility_pipeline_runs_regex_once(spark, tmp_path):
+    """The conf log path's source parse followed by level() and
+    facility() filters keeps one parse regex in the optimized plan."""
+    from syslog_ng_spark.config import build_pipeline, compile_conf, parse_conf
+    from syslog_ng_spark.operators.parsers import RFC3164_RE
+
+    src = tmp_path / "in.log"
+    src.write_text(
+        "<11>Jan  5 10:00:01 web-1 nginx[100]: GET /admin\n"
+        "<78>Jan  5 10:00:04 db-1 cron[7]: job ran\n"
+        "<14>Jan  5 10:00:02 web-1 nginx[100]: GET /index\n"
+    )
+    (spec,) = compile_conf(parse_conf(f"""
+source s {{ file("{src}"); }};
+filter f {{ level(info..emerg) and not facility(cron); }};
+destination d {{ file("{tmp_path / 'out'}"); }};
+log {{ source(s); filter(f); destination(d); }};
+"""))
+    df = build_pipeline(spark, spec)
+    assert _regex_copies(df, RFC3164_RE) == 1
+    assert sorted(r.severity for r in df.collect()) == [3, 6]
+
+
+def test_streaming_parse_under_filter(spark, tmp_path):
+    """file_stream -> parser -> filter, availableNow: the streaming plan
+    keeps one parse regex and the filter sees the parsed fields."""
+    from pyspark.sql import functions as F
+
+    from syslog_ng_spark.operators.parsers import _SEP, RFC3164_RE
+    from syslog_ng_spark.sources.streaming import file_stream
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.log").write_text(
+        "<11>Jan  5 10:00:01 web-1 nginx[100]: boom\n"
+        f"<14>Jan  5 10:00:02 web-1 nginx[100]: fine{_SEP}tail\n"
+        f"junk{_SEP}line\n"
+    )
+    parsed = syslog_parser_3164(file_stream(spark, str(src))).where(F.col("severity") <= 4)
+    q = (
+        parsed.writeStream.format("parquet")
+        .option("path", str(tmp_path / "out"))
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(120)
+        plan = q._jsq.streamingQuery().lastExecution().optimizedPlan().toString()
+    finally:
+        q.stop()
+    assert plan.count(RFC3164_RE) == 1
+    out = spark.read.parquet(str(tmp_path / "out")).collect()
+    assert [(r.severity, r.host, r.message) for r in out] == [(3, "web-1", "boom")]

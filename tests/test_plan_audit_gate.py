@@ -71,3 +71,31 @@ def test_survey_status_block_current():
         text=True,
     )
     assert proc.returncode == 0, proc.stdout + proc.stderr
+
+
+def test_regex_repeat_audit_counts_plan_copies(spark):
+    """tools/explain_audit.py's repeated-regex warning: the per-column
+    regexp_extract form holds its regex once per group, the staged
+    single-pass parse holds it once even under a pushed-down filter."""
+    import importlib.util
+
+    from pyspark.sql import functions as F
+
+    from syslog_ng_spark.operators.parsers import RFC3164_RE, syslog_parser_3164
+
+    spec = importlib.util.spec_from_file_location(
+        "explain_audit", REPO / "tools" / "explain_audit.py"
+    )
+    audit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(audit)
+
+    def repeats(df):
+        return audit.repeated_regexes(df._jdf.queryExecution().optimizedPlan().toJSON())
+
+    df = spark.createDataFrame([("<14>Mar  1 00:00:00 h1 app[7]: x",)], "raw string")
+    per_column = df.select(
+        *[F.regexp_extract("raw", RFC3164_RE, i).alias(f"g{i}") for i in (1, 3, 4)]
+    )
+    assert repeats(per_column) == {RFC3164_RE: 3}
+    staged = syslog_parser_3164(df).where((F.col("severity") <= 6) & (F.col("facility") != 9))
+    assert repeats(staged) == {}

@@ -74,3 +74,19 @@ def test_domain_rollup_counts(spark):
     assert out["example.com"].pages == 3 and out["example.com"].weight == 22
     assert out["example.com"].approx_urls == 2
     assert out["site.co.uk"].pages == 1
+
+
+def test_url_normalize_under_filter_runs_regex_once(spark):
+    """A filter on the normalized URL is pushed below the projection;
+    the URL regex must stay single in the optimized plan."""
+    from syslog_ng_spark.operators.urltools import URL_RE
+
+    df = spark.createDataFrame(
+        [("HTTPS://Example.COM:443/a?utm_source=x",), ("http://h.example.com/b",)], "url string"
+    )
+    secure = url_normalize(df, host_target="host").where(
+        F.col("url_norm").startswith("https:") & (F.col("host") != "")
+    )
+    plan = secure._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count(URL_RE) == 1
+    assert [r.url_norm for r in secure.collect()] == ["https://example.com/a"]

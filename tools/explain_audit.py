@@ -2,15 +2,18 @@
 scale-relevant facts from `explain(formatted)` — pushed filters,
 join strategies, shuffle (Exchange) count, whole-stage codegen spans —
 and flag anti-patterns (row-at-a-time Python UDFs, cartesian products,
-sort-merge joins against tiny dims).
+sort-merge joins against tiny dims, a regex literal that the optimized
+plan holds more than once).
 
 Usage: python tools/explain_audit.py [sf_dir] [query ...] > PLANS.md
 """
 
 from __future__ import annotations
 
+import json
 import re
 import sys
+from collections import Counter
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -33,6 +36,59 @@ def audit_plan(name: str, plan: str) -> dict:
     }
 
 
+# regex-matching expressions; the pattern is child 1 of each
+_REGEX_EXPRS = {
+    "RegExpReplace", "RegExpExtract", "RegExpExtractAll", "RLike",
+    "RegExpCount", "RegExpSubStr", "RegExpInStr",
+}
+
+
+def repeated_regexes(plan_json: str) -> dict[str, int]:
+    """Regex literals that occur more than once in a plan, from
+    `queryExecution().optimizedPlan().toJSON()`: pattern -> copies.
+
+    Each copy runs once per row it sees. A repeat is how a per-column
+    regexp_extract, or a parse alias Catalyst inlined into a pushed-down
+    Filter, shows up; the same pattern on two different inputs (union
+    branches, two columns) is counted too."""
+    counts: Counter = Counter()
+
+    def tree(nodes: list, i: int) -> tuple[tuple, int]:
+        # toJSON flattens every tree (plan or expression) in pre-order
+        node, i = nodes[i], i + 1
+        children = []
+        for _ in range(node["num-children"]):
+            child, i = tree(nodes, i)
+            children.append(child)
+        return (node, children), i
+
+    def visit(value) -> None:
+        if isinstance(value, dict):
+            for v in value.values():
+                visit(v)
+        elif isinstance(value, list):
+            if value and all(isinstance(v, dict) and "num-children" in v for v in value):
+                i = 0
+                while i < len(value):
+                    root, i = tree(value, i)
+                    match(root)
+            for v in value:
+                visit(v)
+
+    def match(root: tuple) -> None:
+        node, children = root
+        name = node["class"].rsplit(".", 1)[-1]
+        if name in _REGEX_EXPRS and len(children) > 1:
+            pat = children[1][0]
+            if pat["class"].endswith(".Literal") and isinstance(pat.get("value"), str):
+                counts[pat["value"]] += 1
+        for child in children:
+            match(child)
+
+    visit(json.loads(plan_json))
+    return {pat: n for pat, n in counts.items() if n > 1}
+
+
 def main():
     from syslog_ng_spark.catalog import QUERIES
     from syslog_ng_spark.session import get_session
@@ -46,7 +102,8 @@ def main():
     print(f"SF dir: `{sf_dir}`. Columns: broadcast/SMJ/BNL join counts,")
     print("shuffle (Exchange) count, whole-stage-codegen span count, scans")
     print("with pushed filters, Python-UDF nodes (0 everywhere = fully")
-    print("JVM), cartesian products.\n")
+    print("JVM), cartesian products. Warnings also list every regex literal")
+    print("that a query's optimized plan holds more than once.\n")
     print("| query | bcast | smj | bnl | shuffles | codegen | pushed | pyudf | cartesian |")
     print("|---|---|---|---|---|---|---|---|---|")
     warnings = []
@@ -66,6 +123,7 @@ def main():
             with redirect_stdout(buf2):
                 df.explain("simple")  # simple mode marks codegen stages as *(N)
             simple = buf2.getvalue()
+            regex_repeats = repeated_regexes(df._jdf.queryExecution().optimizedPlan().toJSON())
         except Exception as e:  # pragma: no cover
             print(f"| {name} | ERROR: {str(e)[:60]} |")
             continue
@@ -80,6 +138,15 @@ def main():
             warnings.append(f"- `{name}`: row-at-a-time Python UDF in plan")
         if a["cartesian"]:
             warnings.append(f"- `{name}`: CartesianProduct in plan")
+        if regex_repeats:
+            top = sorted(regex_repeats.items(), key=lambda kv: -kv[1])
+            shown = ", ".join(
+                f"`{(p if len(p) <= 40 else p[:37] + '...')!r}` {n}x" for p, n in top[:3]
+            )
+            more = f" (+{len(top) - 3} more)" if len(top) > 3 else ""
+            warnings.append(
+                f"- `{name}`: regex literals repeated in the optimized plan: {shown}{more}"
+            )
         # a BNL marked Cross is an explicit crossJoin against a 1-row
         # scalar aggregate (the correct scalar-subquery plan); any
         # OTHER join type riding a BNL means a real join degenerated
